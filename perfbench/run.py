@@ -4,13 +4,14 @@ metrics (untraced) and per-layer metrics (--trace 1).
 
 Run from the root of a checkout:
 
-    python3 perfbench/run.py --workload sql_olap --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload batch_queries --seed 1 --seconds 10 --trace 0
     python3 perfbench/run.py --workload all --seed 1 --seconds 10
 
-It builds the repository's sources together with the harness (sbt, into
-.bench_build/), generates the seeded inputs, runs one JVM (local[nproc],
-one client, one op at a time), checks every output, prints a table of the
-metrics and, as its last line, one JSON object. See perfbench/README.md.
+It builds the repository's sources together with the harness (with the
+Scala compiler of the Spark jars, into .bench_build/), generates the
+seeded inputs, runs one JVM (local[nproc], one client, one op at a time),
+checks every output, prints a table of the metrics and, as its last line,
+one JSON object. See perfbench/README.md.
 """
 import argparse
 import hashlib
@@ -28,6 +29,9 @@ sys.path.insert(0, HERE)
 import stats  # noqa: E402
 
 WORKLOADS = ["batch_queries", "ingest"]
+# A run must end within this many seconds after the build; the JVM gets all
+# but 15 of them, the rest is for the data, the oracle and the report.
+RUN_LIMIT_S = 170
 END_TO_END = [("setup_s", "s"), ("pass_s", "s"), ("op_gmean_s", "s")]
 ADD_OPENS = ["java.base/java.lang", "java.base/java.lang.invoke",
              "java.base/java.lang.reflect", "java.base/java.io", "java.base/java.net",
@@ -77,84 +81,137 @@ class BenchError(Exception):
     pass
 
 
-def sources_digest(root):
+def scala_sources(*dirs):
+    return sorted(os.path.join(d, f) for top in dirs for d, _, fs in os.walk(top)
+                  for f in fs if f.endswith(".scala"))
+
+
+def sources_digest(files):
     h = hashlib.sha256()
-    for top in ("src/main", "perfbench/src/main", "perfbench/build.sbt",
-                "perfbench/project/build.properties"):
-        path = os.path.join(root, top)
-        files = [path] if os.path.isfile(path) else sorted(
-            os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs)
-        for f in files:
-            h.update(f.encode())
-            with open(f, "rb") as fh:
-                h.update(fh.read())
+    for f in files:
+        h.update(f.encode())
+        with open(f, "rb") as fh:
+            h.update(fh.read())
     return h.hexdigest()
 
 
 def spark_jars(root):
     """The Spark jars the repository's own build compiles against (its
-    `unmanagedBase`), else $SPARK_HOME/jars."""
+    `unmanagedBase`), else $SPARK_HOME/jars. They include the Scala
+    compiler the harness is built with."""
+    jars = None
     with open(os.path.join(root, "build.sbt")) as fh:
         m = re.search(r'unmanagedBase\s*:=\s*file\("([^"]+)"\)', fh.read())
     if m:
-        return m.group(1)
-    if os.environ.get("SPARK_HOME"):
-        return os.path.join(os.environ["SPARK_HOME"], "jars")
-    raise BenchError("no Spark jars: build.sbt declares no unmanagedBase and SPARK_HOME is unset")
+        jars = m.group(1)
+    elif os.environ.get("SPARK_HOME"):
+        jars = os.path.join(os.environ["SPARK_HOME"], "jars")
+    if not jars or not any(f.startswith("scala-compiler") for f in
+                           (os.listdir(jars) if os.path.isdir(jars) else ())):
+        raise BenchError(f"no Spark jars with a Scala compiler at {jars!r}: build.sbt "
+                         "names none in unmanagedBase and SPARK_HOME/jars has none")
+    return jars
 
 
-def sbt(root, log_path, *commands, env=None):
-    """Run sbt offline in perfbench/, logging to `log_path`; returns its exit code."""
-    env = dict(os.environ if env is None else env, COURSIER_MODE="offline",
-               GRAFT_BENCH_SPARK_JARS=spark_jars(root))
-    tmp = os.path.join(os.path.dirname(log_path), "tmp")
+def java():
+    exe = shutil.which("java")
+    if not exe and os.environ.get("JAVA_HOME"):
+        exe = os.path.join(os.environ["JAVA_HOME"], "bin", "java")
+    if not exe or not os.access(exe, os.X_OK):
+        raise BenchError("no java on PATH or under JAVA_HOME")
+    return exe
+
+
+def log_tail(path, lines=25):
+    try:
+        with open(path, errors="replace") as fh:
+            return "".join(fh.readlines()[-lines:])
+    except OSError:
+        return ""
+
+
+def scalac(root, work, sources, classpath, dest, log_path):
+    """Compile `sources` into `dest` with the Scala compiler of the Spark
+    jars, in a plain JVM (no build tool, nothing outside the checkout)."""
+    tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
-    opts = ["-Dsbt.offline=true", "-Dsbt.server.autostart=false", "-Xmx2g",
-            f"-Djava.io.tmpdir={tmp}"]
-    repos = os.path.expanduser("~/.sbt/repositories")
-    if os.path.exists(repos):
-        opts += ["-Dsbt.override.build.repos=true", f"-Dsbt.repository.config={repos}"]
-    env["SBT_OPTS"] = " ".join(opts)
+    staging = dest + ".partial"
+    shutil.rmtree(staging, ignore_errors=True)
+    os.makedirs(staging)
+    argfile = os.path.join(work, os.path.basename(dest) + ".sources")
+    with open(argfile, "w") as fh:
+        fh.write("\n".join(f'"{f}"' for f in sources) + "\n")
+    jars = os.path.join(spark_jars(root), "*")
+    cmd = [java(), "-Xss8m", "-Xmx2g", f"-Djava.io.tmpdir={tmp}", "-cp", jars,
+           "scala.tools.nsc.Main", "-nowarn", "-encoding", "UTF-8", "-d", staging,
+           "-classpath", os.pathsep.join(classpath + [jars]), "@" + argfile]
     with open(log_path, "w") as log:
-        return subprocess.run(["sbt", "--batch", "-Dsbt.log.noformat=true", *commands],
-                              cwd=os.path.join(root, "perfbench"), env=env, stdout=log,
-                              stderr=subprocess.STDOUT, stdin=subprocess.DEVNULL).returncode
+        rc = subprocess.run(cmd, stdout=log, stderr=subprocess.STDOUT,
+                            stdin=subprocess.DEVNULL, timeout=600).returncode
+    if rc != 0:
+        raise BenchError(f"scalac exited {rc}, see {log_path}:\n{log_tail(log_path)}")
+    shutil.rmtree(dest, ignore_errors=True)
+    os.rename(staging, dest)
 
 
-def build(root, work):
-    """Compile the repository's sources and the harness with sbt, once per
-    source digest."""
+def compile_once(root, work, name, tops, classpath, salt=""):
+    """Compile the Scala sources under `tops` into .bench_build/perfbench/
+    <name>, unless they are compiled already from the same sources.
+    Returns (class directory, digest)."""
+    files = scala_sources(*(os.path.join(root, t) for t in tops))
+    dest = os.path.join(work, name)
+    stamp = dest + ".stamp"
+    digest = sources_digest(files) + salt
+    if not (os.path.isdir(dest) and os.path.exists(stamp) and open(stamp).read() == digest):
+        scalac(root, work, files, classpath, dest, os.path.join(work, f"build-{name}.log"))
+        with open(stamp, "w") as fh:
+            fh.write(digest)
+    return dest, digest
+
+
+def build(root, work, tests=False):
+    """The repository's sources (src/main/scala) compiled together with the
+    harness (perfbench/src/main/scala) and, with `tests`, the harness's
+    tests. Returns the class directories."""
     if not os.path.isdir(os.path.join(root, "src", "main", "scala", "graft")):
         raise BenchError("no graft sources under src/main/scala: run from a checkout root")
-    stamp = os.path.join(work, "build.stamp")
-    digest = sources_digest(root)
-    classes = os.path.join(work, "target", "scala-2.13", "classes")
-    if os.path.exists(stamp) and open(stamp).read() == digest and os.path.isdir(classes):
-        return classes
     os.makedirs(work, exist_ok=True)
-    if sbt(root, os.path.join(work, "build.log"), "compile") != 0:
-        raise BenchError(f"sbt compile failed, see {work}/build.log")
-    with open(stamp, "w") as fh:
-        fh.write(digest)
-    return classes
+    main, digest = compile_once(root, work, "classes",
+                                ["src/main/scala", "perfbench/src/main/scala"], [])
+    if not tests:
+        return [main]
+    test, _ = compile_once(root, work, "test-classes", ["perfbench/src/test/scala"],
+                           [main], salt=digest)
+    return [main, test]
 
 
-def run_jvm(root, classes, workload, seed, seconds, trace, data, out):
-    cores = os.cpu_count() or 1
+def spark_command(root, classes, tmp, main, *args):
+    """The java command line that runs `main` with Spark, the repository's
+    resources and `classes` on the classpath."""
+    return ([java()] + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
+            + ["-Xmx3g", f"-Djava.io.tmpdir={tmp}", "-Dspark.ui.enabled=false",
+               "-cp", os.pathsep.join(classes + [os.path.join(root, "src", "main", "resources"),
+                                                 os.path.join(spark_jars(root), "*")]),
+               main, *args])
+
+
+def run_jvm(root, classes, workload, seed, seconds, trace, data, out, timeout):
     tmp = os.path.join(out, "tmp")
     os.makedirs(tmp, exist_ok=True)
-    cmd = (["java"] + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
-           + ["-Xmx3g", f"-Djava.io.tmpdir={tmp}", "-Dspark.ui.enabled=false",
-              "-cp", os.pathsep.join([classes, os.path.join(root, "src", "main", "resources"),
-                                      os.path.join(spark_jars(root), "*")]),
-              "graftbench.Main", "--workload", workload, "--seed", str(seed),
-              "--seconds", str(seconds), "--trace", "1" if trace else "0",
-              "--data", data, "--out", out])
-    with open(os.path.join(out, "jvm.log"), "w") as log:
-        r = subprocess.run(cmd, stdout=log, stderr=subprocess.STDOUT, stdin=subprocess.DEVNULL,
-                           timeout=170)
+    cmd = spark_command(root, classes, tmp, "graftbench.Main", "--workload", workload,
+                        "--seed", str(seed), "--seconds", str(seconds),
+                        "--trace", "1" if trace else "0", "--data", data, "--out", out)
+    log_path = os.path.join(out, "jvm.log")
+    with open(log_path, "w") as log:
+        try:
+            r = subprocess.run(cmd, stdout=log, stderr=subprocess.STDOUT,
+                               stdin=subprocess.DEVNULL, timeout=timeout)
+        except subprocess.TimeoutExpired:
+            raise BenchError(f"{workload}: JVM killed after {timeout:.0f} s, see {log_path}:\n"
+                             + log_tail(log_path))
     if r.returncode != 0:
-        raise BenchError(f"{workload}: JVM exited {r.returncode}, see {out}/jvm.log (cores {cores})")
+        raise BenchError(f"{workload}: JVM exited {r.returncode}, see {log_path}:\n"
+                         + log_tail(log_path))
     with open(os.path.join(out, "result.json")) as fh:
         return json.load(fh)
 
@@ -267,20 +324,21 @@ def per_layer(result, spans, traced, untraced):
             out[metric] = stats.median(vals)
     out["sources.bytes_written_mb"] = sum(
         p["after"].get("table_mb", 0.0) for p in traced) / n
+    bracket = [p["wall_s"] for p in untraced
+               if any(abs(p["pass"] - t["pass"]) == 1 for t in traced)]
     out["bench.trace_overhead_s"] = (stats.median([p["wall_s"] for p in traced])
-                                     - statistics.mean([p["wall_s"] for p in untraced]))
+                                     - statistics.mean(bracket))
     return {name: out.get(name, 0.0) for name, _ in PER_LAYER}
 
 
-def run_workload(root, work, workload, seed, seconds, trace):
+def run_workload(root, work, classes, workload, seed, seconds, trace, timeout):
     import datagen
-    classes = build(root, work)
     data = os.path.join(work, "data", f"seed-{seed}")
     datagen.generate(seed, data)
     out = os.path.join(work, "runs", workload)
     shutil.rmtree(out, ignore_errors=True)
     os.makedirs(out)
-    result = run_jvm(root, classes, workload, seed, seconds, trace, data, out)
+    result = run_jvm(root, classes, workload, seed, seconds, trace, data, out, timeout)
     spans = []
     if trace:
         with open(os.path.join(out, "spans.json")) as fh:
@@ -323,8 +381,14 @@ def main(argv=None):
     work = os.path.join(root, ".bench_build", "perfbench")
     load_start = loadavg()
     names = WORKLOADS if a.workload == "all" else [a.workload]
+    # Any integer seed works; the JVM and the data generator see it mod 2^31.
+    seed = a.seed % 2**31
     try:
-        results = {w: run_workload(root, work, w, a.seed, a.seconds, a.trace) for w in names}
+        classes = build(root, work)
+        results = {}
+        for w in names:
+            results[w] = run_workload(root, work, classes, w, seed, a.seconds, a.trace,
+                                      timeout=RUN_LIMIT_S - 15)
     except (BenchError, subprocess.TimeoutExpired, OSError, KeyError, ValueError) as e:
         print(f"graft-bench: {e}", file=sys.stderr)
         return 2

@@ -3,7 +3,7 @@
 
     python3 perfbench/selftest.py
 
-The statistics tests (perfbench/test_stats.py), then the plan-walk test
+The statistics tests (perfbench/test_stats.py), then the plan-walk check
 (perfbench/src/test/scala) over the seed-1 tables.
 """
 import os
@@ -24,10 +24,15 @@ def main():
         return 1
     data = os.path.join(work, "data", "seed-1")
     datagen.generate(1, data)
-    log = os.path.join(work, "test.log")
-    rc = run.sbt(root, log, "test", env=dict(os.environ, GRAFT_BENCH_DATA=data))
-    with open(log) as fh:
-        print("".join(l for l in fh if "Test" in l or "***" in l or "passed" in l)[-3000:])
+    classes = run.build(root, work, tests=True)
+    tmp = os.path.join(work, "tmp")
+    os.makedirs(tmp, exist_ok=True)
+    cmd = run.spark_command(root, classes, tmp, "graftbench.PlanWalkCheck", data)
+    log_path = os.path.join(work, "selftest.log")
+    with open(log_path, "w") as log:
+        rc = subprocess.run(cmd, cwd=tmp, stdin=subprocess.DEVNULL, stderr=log).returncode
+    if rc:
+        print(run.log_tail(log_path), file=sys.stderr)
     return rc
 
 

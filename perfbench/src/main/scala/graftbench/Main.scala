@@ -111,9 +111,10 @@ object Main {
 
     val planned = math.max(1, math.round(o("seconds").toDouble / w.nominalPassSeconds).toInt)
     // A traced run brackets one traced pass between two untraced ones; the
-    // tracing overhead is the traced pass minus their mean.
-    val tracedPass = if (trace) 1 else -1
-    val total = if (trace) 3 else planned
+    // tracing overhead is the traced pass minus their mean. The first pass
+    // after the check pass still runs ~10 % slow, so it goes before them.
+    val tracedPass = if (trace) 2 else -1
+    val total = if (trace) 4 else planned
     val gcBeans = ManagementFactory.getGarbageCollectorMXBeans.asScala
     val heapPools = ManagementFactory.getMemoryPoolMXBeans.asScala
       .filter(_.getType == java.lang.management.MemoryType.HEAP)

@@ -102,7 +102,7 @@ final class Composite(parts: Seq[Workload]) extends Workload {
  * of the same log, and so is the final table.
  */
 final class IcebergDml(seed: Long, data: String, out: String) extends Workload {
-  val nominalPassSeconds = 6.0
+  val nominalPassSeconds = 6.3
   private val BaseRows = 3000
   private val Partitioning = Map("o_orderkey" -> "bucket[4]")
   private val schema = StructType(Seq(
@@ -266,7 +266,7 @@ final class IcebergDml(seed: Long, data: String, out: String) extends Workload {
  * gates over the same documents.
  */
 final class StreamCurate(seed: Long, data: String, out: String) extends Workload {
-  val nominalPassSeconds = 2.5
+  val nominalPassSeconds = 3.0
   private val BacklogFiles = 4
   private val MinQuality = 0.05
   private val K = 8
