@@ -145,14 +145,6 @@ object Dedup {
       .agg(min(col(idCol)).as("id"), min(col(textCol)).as("txt"))
       .select("id", "txt")
 
-  /** (rep, member) mapping from every doc id to its exact-dup group's
-    * representative (lowest id; rep == member for unique texts). */
-  def exactDupMembers(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    val withHash = docs.select(md5(col(textCol)).as("ch"), col(idCol).as("member"))
-    val reps = withHash.groupBy("ch").agg(min(col("member")).as("rep"))
-    withHash.join(reps, "ch").select("rep", "member")
-  }
-
   /** Exact Jaccard over shingle sets for given candidate pairs. */
   def jaccard(pairs: DataFrame, sh: DataFrame): DataFrame = {
     val sizes = sh.groupBy("id").agg(count(lit(1)).as("n_sh"))
@@ -519,10 +511,7 @@ object Dedup {
     var cur = base.filter(col("u") =!= col("v")) // self-pairs add nothing
     var rounds = 0
     var converged = false
-    val debug = sys.props.contains("graft.cc.debug") ||
-      sys.env.contains("GRAFT_CC_DEBUG")
     while (!converged && rounds < maxIter) {
-      val t0 = System.nanoTime()
       val afterLarge = phase(symmetrize(cur), large = true)
         .localCheckpoint(true)
       val afterSmall = phase(symmetrize(afterLarge), large = false)
@@ -533,9 +522,6 @@ object Dedup {
       // the first differing edge instead of counting them all)
       converged = symDiff(cur, afterLarge)
         .unionByName(symDiff(afterLarge, afterSmall)).isEmpty
-      if (debug)
-        println(f"cc round $rounds converged=$converged " +
-          f"${(System.nanoTime() - t0) / 1e9}%.2f s")
       if (rounds > 0) cur.unpersist() // round-0 input is the shared base
       afterLarge.unpersist()
       cur = afterSmall

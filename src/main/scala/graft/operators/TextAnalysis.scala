@@ -146,25 +146,10 @@ object TextAnalysis {
    */
   def bigramLogProb(docs: DataFrame, idCol: String, textCol: String,
                     vocabSize: Int = 20): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = docs.select(col(idCol).as("id"),
-      posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
-    val counts = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-    val vocab = counts.orderBy(col("cnt").desc, col("tok")).limit(vocabSize)
-      .select(col("tok"), lit(1).as("in_v"))
-    val mapped = toks.join(broadcast(vocab), Seq("tok"), "left")
-      .select(col("id"), col("pos"),
-        when(col("in_v").isNotNull, col("tok")).otherwise(lit("<oov>")).as("w"))
-    val byDoc = Window.partitionBy("id").orderBy("pos")
-    val bi = mapped.withColumn("w1", lag("w", 1).over(byDoc))
-      .filter(col("w1").isNotNull)
-      .select(col("id"), col("w1"), col("w").as("w2"))
-    // model tables: bounded by (vocab+1) and (vocab+1)^2 — broadcastable
-    val c1 = mapped.groupBy(col("w").as("w1")).agg(count(lit(1)).as("c1"))
-    val c12 = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-    val vsize = vocab.agg(count(lit(1)).cast("long").as("v_size"))
-    bi.join(broadcast(c12), Seq("w1", "w2"))
-      .join(broadcast(c1), Seq("w1"))
+    val t = bigramTables(docs, idCol, textCol, vocabSize)
+    val vsize = t.vocab.agg(count(lit(1)).cast("long").as("v_size"))
+    t.bi.join(broadcast(t.c12), Seq("w1", "w2"))
+      .join(broadcast(t.c1), Seq("w1"))
       .crossJoin(broadcast(vsize))
       .select(col("id"),
         round(log((col("c12") + lit(1L)).cast("double") /
@@ -173,6 +158,63 @@ object TextAnalysis {
       .groupBy("id")
       .agg(count(lit(1)).cast("long").as("n_bigrams"),
         sum("lp_micro").as("lp_sum_micro"))
+  }
+
+  /** Separator of the n-gram LM map-literal keys: tokens come from a
+    * space split, so a space never occurs INSIDE a token and the key is
+    * unambiguous (an '_' or '|' separator could collide with token
+    * content). */
+  private val NgramKeySep = " "
+
+  /** The per-row LM folds' map-literal key of an n-gram: its tokens
+    * [[NgramKeySep]]-joined. */
+  private def ngramKey(ws: Column*): Column =
+    concat(ws.flatMap(w => Seq(lit(NgramKeySep), w)).tail: _*)
+
+  /** Collect an (n-gram columns…, count) table into the map literal the
+    * per-row LM folds look up: the first `arity` string columns
+    * [[NgramKeySep]]-joined → the count. */
+  private def collectNgramCounts(df: DataFrame,
+                                 arity: Int): Map[String, Long] =
+    df.collect().map(r => (0 until arity).map(r.getString)
+      .mkString(NgramKeySep) -> r.getLong(arity)).toMap
+
+  /** The n-gram LMs' shared prelude: the top-`vocabSize` vocabulary
+    * (tok, in_v) and the token stream (id, pos, w) with every token
+    * outside it mapped to one `<oov>` bucket FIRST — so every count
+    * table downstream is (vocab+1)^arity-bounded. */
+  private def oovMapped(docs: DataFrame, idCol: String, textCol: String,
+                        vocabSize: Int): (DataFrame, DataFrame) = {
+    val toks = docs.select(col(idCol).as("id"),
+      posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
+    val counts = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
+    val vocab = counts.orderBy(col("cnt").desc, col("tok")).limit(vocabSize)
+      .select(col("tok"), lit(1).as("in_v"))
+    val mapped = toks.join(broadcast(vocab), Seq("tok"), "left")
+      .select(col("id"), col("pos"),
+        when(col("in_v").isNotNull, col("tok")).otherwise(lit("<oov>")).as("w"))
+    (vocab, mapped)
+  }
+
+  /** The bigram LM's lazy training tables — the ONE derivation that
+    * [[bigramLogProb]] joins against and [[bigramModel]] collects: the
+    * vocabulary, the per-doc bigram stream `bi` (id, w1, w2) off the LAG
+    * window, and the count tables `c1` (w1, c1) / `c12` (w1, w2, c12),
+    * bounded by (vocab+1) and (vocab+1)² — broadcastable. */
+  private final case class BigramTables(vocab: DataFrame, bi: DataFrame,
+                                        c1: DataFrame, c12: DataFrame)
+
+  private def bigramTables(docs: DataFrame, idCol: String, textCol: String,
+                           vocabSize: Int): BigramTables = {
+    import org.apache.spark.sql.expressions.Window
+    val (vocab, mapped) = oovMapped(docs, idCol, textCol, vocabSize)
+    val byDoc = Window.partitionBy("id").orderBy("pos")
+    val bi = mapped.withColumn("w1", lag("w", 1).over(byDoc))
+      .filter(col("w1").isNotNull)
+      .select(col("id"), col("w1"), col("w").as("w2"))
+    val c1 = mapped.groupBy(col("w").as("w1")).agg(count(lit(1)).as("c1"))
+    val c12 = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
+    BigramTables(vocab, bi, c1, c12)
   }
 
   /**
@@ -271,49 +313,23 @@ object TextAnalysis {
   def trigramStupidBackoff(docs: DataFrame, idCol: String, textCol: String,
                            vocabSize: Int = 20, trigramMin: Long = 2L,
                            bigramMin: Long = 2L): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    require(vocabSize >= 1 && vocabSize <= 256,
-      s"vocabSize must be in [1, 256] (the (V+1)^3 trigram table is " +
-        s"broadcast — keep it bounded), got $vocabSize")
-    require(trigramMin >= 1L && bigramMin >= 1L,
-      "count-pruning thresholds must be >= 1")
+    val t = trigramTables(docs, idCol, textCol, vocabSize, trigramMin,
+      bigramMin)
     val pen = lit(StupidBackoffPenaltyMicro)
-    val toks = docs.select(col(idCol).as("id"),
-      posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
-    val counts = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-    val vocab = counts.orderBy(col("cnt").desc, col("tok")).limit(vocabSize)
-      .select(col("tok"), lit(1).as("in_v"))
-    val mapped = toks.join(broadcast(vocab), Seq("tok"), "left")
-      .select(col("id"), col("pos"),
-        when(col("in_v").isNotNull, col("tok")).otherwise(lit("<oov>")).as("w"))
-    val byDoc = Window.partitionBy("id").orderBy("pos")
-    val tri = mapped
-      .withColumn("w2", lag("w", 1).over(byDoc))
-      .withColumn("w1", lag("w", 2).over(byDoc))
-      .filter(col("w1").isNotNull)
-      .select(col("id"), col("w1"), col("w2"), col("w").as("w3"))
-    val uni = mapped.groupBy(col("w")).agg(count(lit(1)).as("cu"))
-    val bi = mapped.withColumn("wp", lag("w", 1).over(byDoc))
-      .filter(col("wp").isNotNull)
-      .groupBy(col("wp").as("b1"), col("w").as("b2"))
-      .agg(count(lit(1)).as("cb"))
-    val triKept = tri.groupBy("w1", "w2", "w3").agg(count(lit(1)).as("ct"))
-      .filter(col("ct") >= lit(trigramMin))
-    val nTotal = mapped.agg(count(lit(1)).cast("long").as("n_total"))
     val lnMicro = (num: Column, den: Column) =>
       round(log(num.cast("double") / den.cast("double")) * 1e6).cast("long")
-    tri
-      .join(broadcast(triKept), Seq("w1", "w2", "w3"), "left")
-      .join(broadcast(bi.select(col("b1").as("w1"), col("b2").as("w2"),
+    t.tri
+      .join(broadcast(t.triKept), Seq("w1", "w2", "w3"), "left")
+      .join(broadcast(t.bi.select(col("b1").as("w1"), col("b2").as("w2"),
         col("cb").as("c12"))), Seq("w1", "w2"))
-      .join(broadcast(bi.filter(col("cb") >= lit(bigramMin))
+      .join(broadcast(t.bi.filter(col("cb") >= lit(bigramMin))
         .select(col("b1").as("w2"), col("b2").as("w3"),
           col("cb").as("c23"))), Seq("w2", "w3"), "left")
-      .join(broadcast(uni.select(col("w").as("w2"), col("cu").as("c2"))),
+      .join(broadcast(t.uni.select(col("w").as("w2"), col("cu").as("c2"))),
         Seq("w2"))
-      .join(broadcast(uni.select(col("w").as("w3"), col("cu").as("c3"))),
+      .join(broadcast(t.uni.select(col("w").as("w3"), col("cu").as("c3"))),
         Seq("w3"))
-      .crossJoin(broadcast(nTotal))
+      .crossJoin(broadcast(t.nTotal))
       .select(col("id"),
         when(col("ct").isNotNull, lnMicro(col("ct"), col("c12")))
           .when(col("c23").isNotNull,
@@ -338,44 +354,55 @@ object TextAnalysis {
                                 uni: Map[String, Long], nTotal: Long,
                                 trigramMin: Long, bigramMin: Long)
 
-  /** Train the trigram model batch-side — the exact table derivation of
-    * [[trigramStupidBackoff]], collected (bounded by (V+1)³). */
+  /** Train the trigram model batch-side — [[trigramStupidBackoff]]'s
+    * training tables, collected (bounded by (V+1)³). */
   def trigramModel(docs: DataFrame, idCol: String, textCol: String,
                    vocabSize: Int = 20, trigramMin: Long = 2L,
                    bigramMin: Long = 2L): TrigramModel = {
+    val t = trigramTables(docs, idCol, textCol, vocabSize, trigramMin,
+      bigramMin)
+    val triC = collectNgramCounts(t.triKept, 3)
+    val biC = collectNgramCounts(t.bi, 2)
+    val uniC = collectNgramCounts(t.uni, 1)
+    TrigramModel(t.vocab.collect().map(_.getString(0)).toSet, triC, biC,
+      uniC, uniC.values.sum, trigramMin, bigramMin)
+  }
+
+  /** The trigram LM's lazy training tables — the ONE derivation that
+    * [[trigramStupidBackoff]] joins against and [[trigramModel]]
+    * collects: the vocabulary, the per-doc trigram stream `tri` (id, w1,
+    * w2, w3) off the LAG window, the count-pruned trigram table
+    * `triKept` (w1, w2, w3, ct), ALL bigrams `bi` (b1, b2, cb), unigrams
+    * `uni` (w, cu) and the 1-row mapped-token total `nTotal`. */
+  private final case class TrigramTables(vocab: DataFrame, tri: DataFrame,
+                                         triKept: DataFrame, bi: DataFrame,
+                                         uni: DataFrame, nTotal: DataFrame)
+
+  private def trigramTables(docs: DataFrame, idCol: String, textCol: String,
+                            vocabSize: Int, trigramMin: Long,
+                            bigramMin: Long): TrigramTables = {
     import org.apache.spark.sql.expressions.Window
     require(vocabSize >= 1 && vocabSize <= 256,
-      s"vocabSize must be in [1, 256], got $vocabSize")
+      s"vocabSize must be in [1, 256] (the (V+1)^3 trigram table is " +
+        s"broadcast — keep it bounded), got $vocabSize")
     require(trigramMin >= 1L && bigramMin >= 1L,
       "count-pruning thresholds must be >= 1")
-    val toks = docs.select(col(idCol).as("id"),
-      posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
-    val counts = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-    val vocab = counts.orderBy(col("cnt").desc, col("tok")).limit(vocabSize)
-      .select(col("tok"), lit(1).as("in_v"))
-    val mapped = toks.join(broadcast(vocab), Seq("tok"), "left")
-      .select(col("id"), col("pos"),
-        when(col("in_v").isNotNull, col("tok")).otherwise(lit("<oov>")).as("w"))
+    val (vocab, mapped) = oovMapped(docs, idCol, textCol, vocabSize)
     val byDoc = Window.partitionBy("id").orderBy("pos")
-    val triC = mapped
+    val tri = mapped
       .withColumn("w2", lag("w", 1).over(byDoc))
       .withColumn("w1", lag("w", 2).over(byDoc))
       .filter(col("w1").isNotNull)
-      .groupBy(col("w1"), col("w2"), col("w").as("w3"))
-      .agg(count(lit(1)).as("ct"))
-      .filter(col("ct") >= lit(trigramMin))
-      .collect().map(r => (r.getString(0) + " " + r.getString(1) + " " +
-        r.getString(2)) -> r.getLong(3)).toMap
-    val biC = mapped.withColumn("wp", lag("w", 1).over(byDoc))
+      .select(col("id"), col("w1"), col("w2"), col("w").as("w3"))
+    val uni = mapped.groupBy(col("w")).agg(count(lit(1)).as("cu"))
+    val bi = mapped.withColumn("wp", lag("w", 1).over(byDoc))
       .filter(col("wp").isNotNull)
-      .groupBy(col("wp"), col("w"))
+      .groupBy(col("wp").as("b1"), col("w").as("b2"))
       .agg(count(lit(1)).as("cb"))
-      .collect().map(r =>
-        (r.getString(0) + " " + r.getString(1)) -> r.getLong(2)).toMap
-    val uniC = mapped.groupBy(col("w")).agg(count(lit(1)).as("cu"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    TrigramModel(vocab.collect().map(_.getString(0)).toSet, triC, biC,
-      uniC, uniC.values.sum, trigramMin, bigramMin)
+    val triKept = tri.groupBy("w1", "w2", "w3").agg(count(lit(1)).as("ct"))
+      .filter(col("ct") >= lit(trigramMin))
+    val nTotal = mapped.agg(count(lit(1)).cast("long").as("n_total"))
+    TrigramTables(vocab, tri, triKept, bi, uni, nTotal)
   }
 
   /** Per-row stupid-backoff scoring Columns — the FOLD form of
@@ -388,7 +415,6 @@ object TextAnalysis {
     * meets this case on its own corpus). Returns
     * (n_trigrams, lp_sum_micro); docs under 3 tokens fold to (0, 0). */
   def trigramScoreColumns(m: TrigramModel, text: Column): (Column, Column) = {
-    val sep = " "
     val pen = lit(StupidBackoffPenaltyMicro)
     val t = tokens(text)
     val mapped = transform(t, w =>
@@ -402,12 +428,11 @@ object TextAnalysis {
       round(log(num.cast("double") / den.cast("double")) * 1e6).cast("long")
     val lps = transform(trips, p => {
       val ct = element_at(typedLit(m.tri),
-        concat(p.getField("0"), lit(sep), p.getField("1"), lit(sep),
-          p.getField("2")))
+        ngramKey(p.getField("0"), p.getField("1"), p.getField("2")))
       val c12 = coalesce(element_at(typedLit(m.bi),
-        concat(p.getField("0"), lit(sep), p.getField("1"))), lit(1L))
+        ngramKey(p.getField("0"), p.getField("1"))), lit(1L))
       val c23 = element_at(typedLit(m.bi),
-        concat(p.getField("1"), lit(sep), p.getField("2")))
+        ngramKey(p.getField("1"), p.getField("2")))
       val c2 = coalesce(element_at(typedLit(m.uni), p.getField("1")), lit(1L))
       val c3 = coalesce(element_at(typedLit(m.uni), p.getField("2")), lit(1L))
       when(ct.isNotNull, lnM(ct, c12))
@@ -461,43 +486,33 @@ object TextAnalysis {
         sum("w_micro").as("score_sum_micro"))
   }
 
-  /** A trained bigram LM, the deployable artifact of [[bigramLogProb]]'s
-    * training pass: `vocab` (tok, in_v) for the OOV mapping, `c1`/`c12`
-    * the smoothed-probability count tables (all (vocab+1)²-bounded —
-    * broadcastable), `vSize` the vocabulary size. Consumed by
-    * [[graft.streaming.StreamingOps.scoreStreamBigram]]. */
-  final case class BigramModel(vocab: DataFrame, c1: DataFrame,
-                               c12: DataFrame, vSize: Long)
+  /** A trained bigram LM as driver-side literals, the deployable
+    * artifact of [[bigramLogProb]]'s training pass: `vocabSet` for the
+    * OOV mapping, `c1` (w1 → count) and `c12` ("w1 w2" → count, keys
+    * space-joined like [[TrigramModel]]'s) the smoothed-probability
+    * count tables (all (vocab+1)²-bounded), `vSize` the vocabulary
+    * size. Consumed by [[bigramScoreColumns]]. */
+  final case class BigramModel(vocabSet: Set[String], c1: Map[String, Long],
+                               c12: Map[String, Long], vSize: Long)
 
-  /** Train the bigram model batch-side (same derivation as
-    * [[bigramLogProb]]'s internal tables: top-`vocabSize` vocabulary,
-    * OOV mapped FIRST, unigram + bigram counts over the mapped stream). */
+  /** Train the bigram model batch-side — [[bigramLogProb]]'s training
+    * tables (top-`vocabSize` vocabulary, OOV mapped FIRST, unigram +
+    * bigram counts over the mapped stream), collected. */
   def bigramModel(docs: DataFrame, idCol: String, textCol: String,
                   vocabSize: Int = 20): BigramModel = {
-    import org.apache.spark.sql.expressions.Window
-    val toks = docs.select(col(idCol).as("id"),
-      posexplode(tokens(col(textCol))).as(Seq("pos", "tok")))
-    val counts = toks.groupBy("tok").agg(count(lit(1)).as("cnt"))
-    val vocab = counts.orderBy(col("cnt").desc, col("tok")).limit(vocabSize)
-      .select(col("tok"), lit(1).as("in_v"))
-    val mapped = toks.join(broadcast(vocab), Seq("tok"), "left")
-      .select(col("id"), col("pos"),
-        when(col("in_v").isNotNull, col("tok")).otherwise(lit("<oov>")).as("w"))
-    val byDoc = Window.partitionBy("id").orderBy("pos")
-    val bi = mapped.withColumn("w1", lag("w", 1).over(byDoc))
-      .filter(col("w1").isNotNull)
-      .select(col("id"), col("w1"), col("w").as("w2"))
-    val c1 = mapped.groupBy(col("w").as("w1")).agg(count(lit(1)).as("c1"))
-    val c12 = bi.groupBy("w1", "w2").agg(count(lit(1)).as("c12"))
-    BigramModel(vocab, c1, c12, vocab.count())
+    val t = bigramTables(docs, idCol, textCol, vocabSize)
+    val vocabSet = t.vocab.collect().map(_.getString(0)).toSet
+    BigramModel(vocabSet, collectNgramCounts(t.c1, 1),
+      collectNgramCounts(t.c12, 2), vocabSet.size.toLong)
   }
 
   /** Per-row bigram-LM scoring Columns — the FOLD form of
     * [[bigramLogProb]]'s inference pass for a TRAINED [[BigramModel]]:
-    * the model's (vocab+1)²-bounded count tables collapse into map
-    * literals and each document scores in one pure projection (no
-    * explode to a row fan-out, no join, no aggregation, no window) —
-    * the shape a streaming gate needs ([[graft.streaming.StreamingOps
+    * the model's (vocab+1)²-bounded count tables ride as map literals
+    * and each document scores in one pure projection (no explode to a
+    * row fan-out, no join, no aggregation, no window) — the shape a
+    * streaming scorer needs ([[graft.streaming.StreamingOps
+    * .scoreStreamBigram]], [[graft.streaming.StreamingOps
     * .curateStream]]'s `lmGate`) and bit-equal to the batch scorer on
     * every doc both emit. Returns (n_bigrams, lp_sum_micro); a bigram
     * UNSEEN in training scores with c12 = 0 under the same add-one
@@ -510,25 +525,17 @@ object TextAnalysis {
     * closure — vocabularies beyond literal scale belong to
     * [[hashedLinearTrain]]'s hashing-trick family instead. */
   def bigramScoreColumns(m: BigramModel, text: Column): (Column, Column) = {
-    // ' ' joins the pair key: tokens come from a space-split, so a
-    // space can never occur INSIDE a token and the key is unambiguous
-    // (an '_' or '|' separator could collide with token content)
-    val sep = " "
-    val vocabSet = m.vocab.collect().map(_.getString(0)).toSet
-    val c1m = m.c1.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val c12m = m.c12.collect()
-      .map(r => (r.getString(0) + sep + r.getString(1)) -> r.getLong(2)).toMap
     val t = tokens(text)
     val mapped = transform(t, w =>
-      when(w.isInCollection(vocabSet), w).otherwise(lit("<oov>")))
+      when(w.isInCollection(m.vocabSet), w).otherwise(lit("<oov>")))
     val pairs = arrays_zip(
       slice(mapped, lit(1), size(mapped) - 1),
       slice(mapped, lit(2), size(mapped) - 1))
     val lps = transform(pairs, p => {
       val c12v = coalesce(
-        element_at(typedLit(c12m),
-          concat(p.getField("0"), lit(sep), p.getField("1"))), lit(0L))
-      val c1v = coalesce(element_at(typedLit(c1m), p.getField("0")), lit(0L))
+        element_at(typedLit(m.c12),
+          ngramKey(p.getField("0"), p.getField("1"))), lit(0L))
+      val c1v = coalesce(element_at(typedLit(m.c1), p.getField("0")), lit(0L))
       round(log((c12v + lit(1L)).cast("double") /
           (c1v + lit(m.vSize) + lit(1L)).cast("double")) * 1e6).cast("long")
     })
@@ -1026,8 +1033,7 @@ object TextAnalysis {
     * prior_micro) the log-prior in integer micro-nats, `vSize` the
     * vocabulary size. All tables are bounded by V (vocabulary) × L
     * (labels) — broadcastable at any corpus scale. Consumed by
-    * [[nbPredict]] and the streaming twin
-    * [[graft.streaming.StreamingOps.nbPredictStream]]. */
+    * [[nbPredict]] and its per-row fold twin [[nbPredictFold]]. */
   final case class NbModel(vocab: DataFrame, clsTok: DataFrame,
                            clsTot: DataFrame, prior: DataFrame, vSize: Long)
 
@@ -1168,77 +1174,56 @@ object TextAnalysis {
       docs, idCol, textCol)
 
   /** The per-row NB score ARRAY (one micro-nat log-posterior per label,
-    * labels sorted ascending) over a text Column, built from a
-    * driver-materialized model — the per-row fold shared by
-    * [[nbPredictFold]] and the streaming curation gate
-    * ([[graft.streaming.StreamingOps.curateStream]]). Returns the
-    * scores Column and the sorted label list (index i of the array is
-    * labels(i)); derive the prediction with [[nbPredFromScores]].
-    *
-    * `shards` splits the V×L token LUT into that many independent map
-    * literals whose per-shard folds SUM (long addition is associative —
-    * results are bit-equal to the single-literal form, pinned in
-    * OperatorsSpec): the escape hatch for vocabularies past broadcast
-    * comfort (~100 MB of literals in one expression), same shape as the
-    * PQ codebook boundary. OOV mass is added once via the token count
-    * minus the across-shard match count. */
-  def nbScoreArray(model: NbModel, text: Column,
-                   shards: Int = 1): (Column, Seq[String]) = {
-    require(shards >= 1, "shards must be >= 1")
-    // Spark's `round` routes doubles through Scala BigDecimal (the
-    // toString-based constructor) with HALF_UP — replicate exactly
-    def micro(num: Long, den: Long): Long =
-      BigDecimal(Math.log(num.toDouble / den.toDouble) * 1e6)
-        .setScale(0, BigDecimal.RoundingMode.HALF_UP).longValue
-    val labels: Seq[String] = model.prior.select("label")
-      .collect().map(_.getString(0)).sorted.toSeq
-    val ctot: Map[String, Long] = model.clsTot.collect()
+    * labels sorted ascending) over a text Column — the [[labelScoreFold]]
+    * over the token array, shared by [[nbPredictFold]] and the streaming
+    * curation gate ([[graft.streaming.StreamingOps.curateStream]]).
+    * Returns the scores Column and the sorted label list (index i of the
+    * array is labels(i)); derive the prediction with
+    * [[nbPredFromScores]]. */
+  def nbScoreArray(model: NbModel, text: Column): (Column, Seq[String]) =
+    labelScoreFold[String](tokens(text), model.clsTok, model.clsTot,
+      model.prior, model.vSize)
+
+  /** Spark's `round` routes doubles through Scala BigDecimal (the
+    * toString-based constructor) with HALF_UP — replicated exactly, so
+    * driver-side log-probs equal the distributed scorers' `round`. */
+  private def micro(num: Long, den: Long): Long =
+    BigDecimal(Math.log(num.toDouble / den.toDouble) * 1e6)
+      .setScale(0, BigDecimal.RoundingMode.HALF_UP).longValue
+
+  /** The per-row label-score fold behind [[nbScoreArray]] and
+    * [[hashedLinearScoreArray]]: a count model — per-label key counts
+    * `keyCounts` (label, key, count), per-label totals `clsTot` (label,
+    * ctot), log-priors `prior` (label, prior_micro) — collapses to
+    * LITERALS (key → per-label log-prob array under add-one smoothing
+    * over `width` keys, one default array for unseen keys, one prior
+    * array) and the score is ONE SQL `aggregate` over the `keys` array
+    * summing L-length vectors. Log-probs replicate the join forms'
+    * arithmetic exactly (same JVM `Math.log`, same HALF_UP rounding as
+    * Spark's `round`). Driver-side materialization is
+    * min(width, distinct keys) × L longs. */
+  private def labelScoreFold[K: scala.reflect.runtime.universe.TypeTag](
+      keys: Column, keyCounts: DataFrame, clsTot: DataFrame,
+      prior: DataFrame, width: Long): (Column, Seq[String]) = {
+    val priorMicro: Map[String, Long] = prior.collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val priorMicro: Map[String, Long] = model.prior.collect()
+    val labels: Seq[String] = priorMicro.keys.toSeq.sorted
+    val ctot: Map[String, Long] = clsTot.collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val den = labels.map(l => ctot(l) + model.vSize + 1L)
-    val oovArr: Seq[Long] = den.map(d => micro(1L, d))
-    val priorArr: Seq[Long] = labels.map(priorMicro)
-    val tokMap: Map[String, Seq[Long]] = model.clsTok.collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+    val den = labels.map(l => ctot(l) + width + 1L)
+    val lutMap: Map[K, Seq[Long]] = keyCounts.collect()
+      .map(r => (r.getString(0), r.getAs[K](1), r.getLong(2)))
       .groupBy(_._2)
-      .map { case (tok, rows) =>
+      .map { case (key, rows) =>
         val byLabel = rows.map(t => t._1 -> t._3).toMap
-        tok -> labels.indices.map(i =>
+        key -> labels.indices.map(i =>
           micro(byLabel.getOrElse(labels(i), 0L) + 1L, den(i))).toSeq
       }
-    val oov = typedLit(oovArr)
-    val scores =
-      if (shards == 1) {
-        val lut = typedLit(tokMap)
-        aggregate(
-          tokens(text), typedLit(priorArr),
-          (acc, tok) => zip_with(acc,
-            coalesce(element_at(lut, tok), oov), (a, b) => a + b))
-      } else {
-        // deterministic split on the token's hash (any partition is
-        // correct — per-shard sums are order-independent long additions;
-        // String.hashCode is spec-defined, stable across JVMs)
-        val byShard: Map[Int, Map[String, Seq[Long]]] = tokMap.groupBy {
-          case (tok, _) => math.floorMod(tok.hashCode, shards)
-        }
-        val zeros = typedLit(labels.map(_ => 0L))
-        val toks = tokens(text)
-        val parts: Seq[(Column, Column)] = (0 until shards).map { s =>
-          val lutS = typedLit(byShard.getOrElse(s, Map.empty[String, Seq[Long]]))
-          val sum = aggregate(toks, zeros, (acc, t) => zip_with(acc,
-            coalesce(element_at(lutS, t), zeros), (a, b) => a + b))
-          val matched = aggregate(toks, lit(0L), (acc, t) =>
-            acc + when(element_at(lutS, t).isNotNull, lit(1L))
-              .otherwise(lit(0L)))
-          (sum, matched)
-        }
-        val oovCount = size(toks).cast("long") - parts.map(_._2).reduce(_ + _)
-        val shardSum = parts.map(_._1)
-          .reduce((a, b) => zip_with(a, b, (x, y) => x + y))
-        zip_with(zip_with(typedLit(priorArr), shardSum, (a, b) => a + b),
-          oov, (a, o) => a + o * oovCount)
-      }
+    val lut = typedLit(lutMap)
+    val dflt = typedLit(den.map(d => micro(1L, d)))
+    val scores = aggregate(keys, typedLit(labels.map(priorMicro)),
+      (acc, k) => zip_with(acc,
+        coalesce(element_at(lut, k), dflt), (a, b) => a + b))
     (scores, labels)
   }
 
@@ -1250,34 +1235,35 @@ object TextAnalysis {
     element_at(typedLit(labels),
       array_position(scores, array_max(scores)).cast("int"))
 
-  /** The broadcast-fold serving form of [[nbPredict]] — the model
-    * collapsed to LITERALS (token → per-label log-prob array, one OOV
-    * array, one prior array) and the whole classification computed as a
-    * PURE PER-ROW PROJECTION: one SQL `aggregate` fold over the token
-    * array summing L-length vectors, then an argmax. No join, no
-    * aggregation, no window — so the SAME operator runs on an
-    * append-mode stream ([[graft.streaming.StreamingOps.nbPredictStream]])
-    * and is bit-equal to the batch argmax (`array_position` of the max
-    * returns the FIRST hit, and `labels` is sorted ascending — the same
-    * score-desc/label-asc tie-break).
-    *
-    * Driver-side model materialization is V×L longs (~1000 tokens × a
-    * handful of labels = KBs); the per-token log-probs replicate the
-    * distributed scorer's arithmetic exactly — same JVM `Math.log`,
-    * same HALF_UP rounding as Spark's `round`. Boundary: at V×L beyond
-    * broadcast comfort (~100 MB of literals in one expression) pass
-    * `shards > 1` — the LUT splits into that many map literals whose
-    * per-shard folds sum, bit-equal to the single-literal form (same
-    * shape as the PQ broadcast boundary; pinned in OperatorsSpec). */
-  def nbPredictFold(model: NbModel, docs: DataFrame, idCol: String,
-                    textCol: String, shards: Int = 1): DataFrame = {
-    val (scores, labels) = nbScoreArray(model, col(textCol), shards)
+  /** (id, pred, score_micro) off a per-row score-array fold — the argmax
+    * projection shared by [[nbPredictFold]] and
+    * [[hashedLinearPredictFold]]. Null-text docs drop, like the join
+    * forms' explode. */
+  private def argmaxFold(docs: DataFrame, idCol: String, textCol: String,
+                         scored: (Column, Seq[String])): DataFrame = {
+    val (scores, labels) = scored
     docs.filter(col(textCol).isNotNull)
       .select(col(idCol).as("id"), scores.as("scores"))
       .select(col("id"),
         nbPredFromScores(col("scores"), labels).as("pred"),
         array_max(col("scores")).as("score_micro"))
   }
+
+  /** The broadcast-fold serving form of [[nbPredict]] — the model
+    * collapsed to LITERALS (token → per-label log-prob array, one OOV
+    * array, one prior array) and the whole classification computed as a
+    * PURE PER-ROW PROJECTION: one SQL `aggregate` fold over the token
+    * array summing L-length vectors, then an argmax. No join, no
+    * aggregation, no window — so the SAME operator runs on an
+    * append-mode stream and is bit-equal to the batch argmax
+    * (`array_position` of the max returns the FIRST hit, and `labels` is
+    * sorted ascending — the same score-desc/label-asc tie-break).
+    *
+    * Driver-side model materialization is V×L longs (~1000 tokens × a
+    * handful of labels = KBs). */
+  def nbPredictFold(model: NbModel, docs: DataFrame, idCol: String,
+                    textCol: String): DataFrame =
+    argmaxFold(docs, idCol, textCol, nbScoreArray(model, col(textCol)))
 
   // ---- fastText-style hashed n-gram LINEAR classifier -----------------
 
@@ -1467,55 +1453,21 @@ object TextAnalysis {
     * prior arrays, the whole classification a PURE PER-ROW PROJECTION
     * (one fold over the feature-slot array, then an argmax) — bit-equal
     * to the join form and streaming-safe, exactly the [[nbPredictFold]]
-    * contract. Driver-side materialization is min(buckets, distinct
-    * features) × L longs. */
+    * contract. */
   def hashedLinearPredictFold(model: HashedLinearModel, docs: DataFrame,
-                              idCol: String, textCol: String): DataFrame = {
-    val (scores, labels) = hashedLinearScoreArray(model, col(textCol))
-    docs.filter(col(textCol).isNotNull)
-      .select(col(idCol).as("id"), scores.as("scores"))
-      .select(col("id"),
-        nbPredFromScores(col("scores"), labels).as("pred"),
-        array_max(col("scores")).as("score_micro"))
-  }
+                              idCol: String, textCol: String): DataFrame =
+    argmaxFold(docs, idCol, textCol,
+      hashedLinearScoreArray(model, col(textCol)))
 
   /** The per-row hashed-linear score ARRAY (one micro-nat score per
     * label, labels sorted ascending) over a text Column — the
-    * [[nbScoreArray]] twin: the model collapses to ONE slot→weights map
-    * literal plus default and prior arrays, the score is a single fold
-    * over the feature-slot array. Shared by [[hashedLinearPredictFold]]
-    * and the streaming curation gate. */
+    * [[labelScoreFold]] over the feature-slot array, smoothed over the
+    * `buckets` slot space. Shared by [[hashedLinearPredictFold]],
+    * [[hashedLinearMarginFold]] and the streaming curation gate. */
   def hashedLinearScoreArray(model: HashedLinearModel,
-                             text: Column): (Column, Seq[String]) = {
-    def micro(num: Long, den: Long): Long =
-      BigDecimal(Math.log(num.toDouble / den.toDouble) * 1e6)
-        .setScale(0, BigDecimal.RoundingMode.HALF_UP).longValue
-    val labels: Seq[String] = model.prior.select("label")
-      .collect().map(_.getString(0)).sorted.toSeq
-    val ctot: Map[String, Long] = model.clsTot.collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val priorMicro: Map[String, Long] = model.prior.collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val den = labels.map(l => ctot(l) + model.buckets.toLong + 1L)
-    val defaultArr: Seq[Long] = den.map(d => micro(1L, d))
-    val priorArr: Seq[Long] = labels.map(priorMicro)
-    val slotMap: Map[Long, Seq[Long]] = model.bucketTok.collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .groupBy(_._2)
-      .map { case (slot, rows) =>
-        val byLabel = rows.map(t => t._1 -> t._3).toMap
-        slot -> labels.indices.map(i =>
-          micro(byLabel.getOrElse(labels(i), 0L) + 1L, den(i))).toSeq
-      }
-    val lut = typedLit(slotMap)
-    val dflt = typedLit(defaultArr)
-    val scores = aggregate(
-      featureSlots(text, model.buckets, model.seed),
-      typedLit(priorArr),
-      (acc, s) => zip_with(acc,
-        coalesce(element_at(lut, s), dflt), (a, b) => a + b))
-    (scores, labels)
-  }
+                             text: Column): (Column, Seq[String]) =
+    labelScoreFold[Long](featureSlots(text, model.buckets, model.seed),
+      model.bucketTok, model.clsTot, model.prior, model.buckets.toLong)
 
   /** Per-row FOLD form of [[hashedLinearMargin]]: `score(target) −
     * max_{l≠target} score(l)` as one Column over the

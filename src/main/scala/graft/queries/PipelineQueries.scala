@@ -3715,7 +3715,7 @@ object PipelineQueries {
         min("id").as("min_id"))
       .orderBy("bin")
     // materialize the (bin-scale) aggregate locally so `extracted` can
-    // be unpersisted NOW — long-lived harnesses (Scratch, registry
+    // be unpersisted NOW — long-lived harnesses (Bench, registry
     // loops) must not leak one corpus-sized cache entry per invocation
     val local = materializeLocal(s, binned)
     extracted.unpersist()

@@ -114,42 +114,24 @@ object StreamingOps {
           .as("avg_logprob"))
   }
 
-  /** Score a STREAM of documents against a STATIC bigram model trained
-    * batch-side ([[graft.operators.TextAnalysis.bigramModel]]) — the
-    * conditional-probability upgrade of [[scoreStreamUnigram]]. Bigrams
-    * are formed per arriving row by zipping the token array with its own
-    * tail (equivalent to the batch scorer's per-doc lag window, but with
-    * no window operator — streaming-safe); OOV mapping and the smoothed
-    * p = (c12+1)/(c1+V+1) then ride stream-static broadcast joins.
-    * Same micro-nat integer arithmetic as the batch scorer, so scores
-    * for the same doc are bit-identical. Docs with fewer than two
-    * tokens produce no output row (no bigrams — batch parity). */
+  /** Score a STREAM of documents under a batch-trained bigram model
+    * ([[graft.operators.TextAnalysis.bigramModel]]) — the
+    * conditional-probability upgrade of [[scoreStreamUnigram]], via the
+    * per-row fold ([[graft.operators.TextAnalysis.bigramScoreColumns]] —
+    * map-literal tables, one pure projection, no window/join/state, the
+    * SAME scorer as [[curateStream]]'s `lmGate`). Bit-equal to the batch
+    * [[graft.operators.TextAnalysis.bigramLogProb]] on every doc both
+    * emit; a bigram unseen in training scores with c12 = 0 under the
+    * same add-one smoothing. Emits (id, n_bigrams, lp_sum_micro) per
+    * arriving doc; docs with fewer than two tokens produce no output row
+    * (no bigrams — batch parity). */
   def scoreStreamBigram(docs: DataFrame, idCol: String, textCol: String,
                         model: graft.operators.TextAnalysis.BigramModel): DataFrame = {
-    val t = split(lower(col(textCol)), " ")
-    val pairs = docs.select(col(idCol).as("id"),
-        explode(arrays_zip(
-            slice(t, lit(1), size(t) - 1), slice(t, lit(2), size(t) - 1)))
-          .as("p"))
-      .select(col("id"),
-        col("p").getField("0").as("w1raw"), col("p").getField("1").as("w2raw"))
-    val v1 = model.vocab.select(col("tok").as("w1raw"), col("in_v").as("v1"))
-    val v2 = model.vocab.select(col("tok").as("w2raw"), col("in_v").as("v2"))
-    pairs
-      .join(broadcast(v1), Seq("w1raw"), "left")
-      .join(broadcast(v2), Seq("w2raw"), "left")
-      .select(col("id"),
-        when(col("v1").isNotNull, col("w1raw")).otherwise(lit("<oov>")).as("w1"),
-        when(col("v2").isNotNull, col("w2raw")).otherwise(lit("<oov>")).as("w2"))
-      .join(broadcast(model.c12), Seq("w1", "w2"))
-      .join(broadcast(model.c1), Seq("w1"))
-      .select(col("id"),
-        round(log((col("c12") + lit(1L)).cast("double") /
-            (col("c1") + lit(model.vSize) + lit(1L)).cast("double")) * 1e6)
-          .cast("long").as("lp_micro"))
-      .groupBy("id")
-      .agg(count(lit(1)).cast("long").as("n_bigrams"),
-        sum("lp_micro").as("lp_sum_micro"))
+    val (n, s) = graft.operators.TextAnalysis
+      .bigramScoreColumns(model, col(textCol))
+    docs.select(col(idCol).as("id"), n.as("n_bigrams"),
+        s.as("lp_sum_micro"))
+      .filter(col("n_bigrams") > 0)
   }
 
   /** Score a STREAM of documents under a batch-trained stupid-backoff
@@ -184,34 +166,6 @@ object StreamingOps {
       graft.operators.TextAnalysis.bpeTokenCountTrained(textCol, merges)
         .as("n_bpe"))
 
-  /** Classify ARRIVING documents with a Naive Bayes model trained
-    * batch-side ([[graft.operators.TextAnalysis.nbTrain]]) — the
-    * deploy-time domain/quality router: train once on the existing
-    * corpus, tag every incoming document with its predicted class. The
-    * model rides as literals and the whole classification is one
-    * per-row `aggregate` fold + argmax
-    * ([[graft.operators.TextAnalysis.nbPredictFold]] — no join, no
-    * aggregation, no window), so the stream stays append-mode-safe and
-    * predictions are bit-equal to the batch
-    * [[graft.operators.TextAnalysis.nbPredict]] argmax. Emits
-    * (id, pred, score_micro) per arriving doc. */
-  def nbPredictStream(docs: DataFrame, idCol: String, textCol: String,
-                      model: graft.operators.TextAnalysis.NbModel): DataFrame =
-    graft.operators.TextAnalysis.nbPredictFold(model, docs, idCol, textCol)
-
-  /** Streaming hashed-linear classification — the fastText-shaped twin
-    * of [[nbPredictStream]]: a batch-trained
-    * [[graft.operators.TextAnalysis.HashedLinearModel]] served as one
-    * slot→weights literal fold per arriving doc
-    * ([[graft.operators.TextAnalysis.hashedLinearPredictFold]] — pure
-    * projection, append-mode-safe, bit-equal to the batch join form). */
-  def hashedLinearPredictStream(docs: DataFrame, idCol: String,
-                                textCol: String,
-                                model: graft.operators.TextAnalysis
-                                  .HashedLinearModel): DataFrame =
-    graft.operators.TextAnalysis
-      .hashedLinearPredictFold(model, docs, idCol, textCol)
-
   /** Streaming ingest curation — the deploy-time filter chain a
     * training-data pipeline runs on ARRIVING documents, composed from
     * the batch [[graft.operators.Curation]]/[[graft.operators.TextAnalysis]]
@@ -230,7 +184,8 @@ object StreamingOps {
     *  4. OPTIONAL Naive-Bayes class gate (`nbGate` — a batch-trained
     *     [[graft.operators.TextAnalysis.NbModel]] plus the label set to
     *     keep; the prediction is the same per-row fold + argmax as
-    *     [[nbPredictStream]], bit-equal to the batch `nbPredict`) — or
+    *     [[graft.operators.TextAnalysis.nbPredictFold]], bit-equal to
+    *     the batch `nbPredict`) — or
     *     the hashed-linear twin (`hlGate`, a
     *     [[graft.operators.TextAnalysis.HashedLinearModel]]) — or the
     *     CALIBRATED margin gate (`hlMargin` = (model, target,

@@ -1076,6 +1076,48 @@ class StreamingSpec extends AnyFunSuite {
       s"doc $id: streaming $s != batch ${batch(id)}") }
   }
 
+  test("streaming bigram scoring ≡ bigramScoreColumns on text with bigrams " +
+      "unseen in training") {
+    import spark.implicits._
+    val docsDf = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    // a vocabulary wider than the corpus: every training token is in
+    // vocab, so `<oov>` never occurs in training and any bigram touching
+    // a word the corpus lacks is UNSEEN (c12 = 0 under add-one smoothing)
+    val corpusToks = docsDf
+      .select(explode(split(lower(col("text")), " ")).as("t")).distinct()
+      .collect().map(_.getString(0)).toSet
+    assert(corpusToks.size < 1000)
+    assert(!corpusToks("quokka") && !corpusToks("wombat"))
+    val model = graft.operators.TextAnalysis
+      .bigramModel(docsDf, "doc_id", "text", vocabSize = 1000)
+    val seen = docsDf.select("text").head().getString(0)
+    val rows = Seq(
+      (1L, "scan column quokka window"), // seen and unseen bigrams
+      (2L, "quokka wombat"),             // every bigram unseen
+      (3L, seen),                        // training text, all seen
+      (4L, "solo"))                      // no bigram: no row
+
+    val in = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, String)](spark)
+    in.addData(rows)
+    val scored = StreamingOps.scoreStreamBigram(
+      in.toDF().toDF("doc_id", "text"), "doc_id", "text", model)
+    StreamingOps.runToMemory(scored, "stream_bigram_unseen",
+      OutputMode.Update())
+    val streamed = spark.table("stream_bigram_unseen").collect()
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+
+    val (nBg, lpSum) = graft.operators.TextAnalysis
+      .bigramScoreColumns(model, col("text"))
+    val fold = rows.toDF("doc_id", "text")
+      .select(col("doc_id"), nBg.as("n"), lpSum.as("s"))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(fold(1L)._1 === 3L && fold(2L)._1 === 1L && fold(4L)._1 === 0L)
+    // one scorer: every doc with a bigram streams exactly the fold's
+    // (n_bigrams, lp_sum_micro) — unseen bigrams counted, not dropped
+    assert(streamed === fold.filter(_._2._1 > 0L))
+  }
+
   test("streaming trigram stupid-backoff scoring matches batch doc-for-doc") {
     import spark.implicits._
     val docsDf = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -1150,8 +1192,8 @@ class StreamingSpec extends AnyFunSuite {
     val rows = docsDf.select("doc_id", "text").limit(30).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     in.addData(rows.toIndexedSeq)
-    val preds = StreamingOps.nbPredictStream(
-      in.toDF().toDF("doc_id", "text"), "doc_id", "text", model)
+    val preds = graft.operators.TextAnalysis.nbPredictFold(
+      model, in.toDF().toDF("doc_id", "text"), "doc_id", "text")
     assert(preds.isStreaming)
     StreamingOps.runToMemory(preds, "stream_nb", OutputMode.Append())
 
@@ -1177,8 +1219,8 @@ class StreamingSpec extends AnyFunSuite {
     val rows = docsDf.select("doc_id", "text").limit(30).collect()
       .map(r => (r.getLong(0), r.getString(1)))
     in.addData(rows.toIndexedSeq)
-    val preds = StreamingOps.hashedLinearPredictStream(
-      in.toDF().toDF("doc_id", "text"), "doc_id", "text", model)
+    val preds = graft.operators.TextAnalysis.hashedLinearPredictFold(
+      model, in.toDF().toDF("doc_id", "text"), "doc_id", "text")
     assert(preds.isStreaming)
     StreamingOps.runToMemory(preds, "stream_hl", OutputMode.Append())
     val streamed = spark.table("stream_hl").collect()

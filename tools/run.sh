@@ -1,6 +1,6 @@
 #!/bin/bash
 # Run a compiled main class against the Spark jars without sbt overhead.
-# Usage: tools/run.sh graft.Scratch [args...]
+# Usage: tools/run.sh graft.Verify [args...]
 set -e
 CLS="$1"; shift || true
 # `sbt compile` does NOT copy resources: a fresh classes dir lacks the
